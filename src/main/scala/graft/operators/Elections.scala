@@ -102,41 +102,67 @@ object Elections {
 
   /** A11 election body over a distance lookup — the single copy shared by
     * clusterScore (direct vincenty) and electBoth (precomputed matrix).
-    * Insertion-ordered maps → deterministic tie-breaks.
+    * Each distinct (lat, lng) is interned once, in first-insertion order,
+    * so scores and neighbor counts live in flat arrays indexed by location
+    * id and the n² loop compares ids; id order is the insertion order that
+    * makes the tie-breaks deterministic. Coordinates must be finite (a NaN
+    * never equals itself, so it has no stable location).
     */
   private def a11Core(points: Seq[Pt], dist: (Int, Int) => Double,
                       thresholdM: Double): (Double, Double, Double) = {
     val n = points.length
-    val score = mutable.LinkedHashMap[(Double, Double), Double]()
-    val neighbors = mutable.LinkedHashMap[(Double, Double), Int]()
-    points.foreach { p => score((p.lat, p.lng)) = 0.0; neighbors((p.lat, p.lng)) = 0 }
+    val idOf = mutable.HashMap[(Double, Double), Int]()
+    val firstPt = mutable.ArrayBuffer[Int]() // location id -> first point index
+    val loc = new Array[Int](n)
     var i = 0
+    points.foreach { p =>
+      loc(i) = idOf.getOrElseUpdate((p.lat, p.lng), { firstPt += i; firstPt.length - 1 })
+      i += 1
+    }
+    val m = firstPt.length
+    val score = new Array[Double](m)
+    val neighbors = new Array[Int](m)
+    i = 0
     while (i < n) {
-      val ki = (points(i).lat, points(i).lng)
+      val li = loc(i)
+      // the score is overwritten per pairing: the last pairing of the last
+      // point at this location is the one that stands
+      var last = Double.NaN
+      var paired = false
+      var nb = 0
       var j = 0
       while (j < n) {
-        val kj = (points(j).lat, points(j).lng)
-        if (ki != kj) {
+        if (loc(j) != li) {
           val d = dist(i, j)
-          score(ki) = 1.0 / (1.0 + d)
-          if (d <= thresholdM) neighbors(ki) = neighbors(ki) + 1
+          last = d; paired = true
+          if (d <= thresholdM) nb += 1
         }
         j += 1
       }
+      if (paired) score(li) = 1.0 / (1.0 + last)
+      neighbors(li) += nb
       i += 1
     }
-    val maxScore = score.values.max
-    val maxLocs = score.iterator.filter(_._2 == maxScore).map(_._1).toSeq
-    var best = maxLocs.head
+    var maxScore = score(0)
+    var k = 1
+    while (k < m) { if (score(k) > maxScore) maxScore = score(k); k += 1 }
+    // the first max-score location in id order, unless a max-score
+    // location reaches the majority (integer n / 2): then the one with the
+    // most neighbors, first in id order on a tie, at confidence 1
+    var best = -1
     var maxNbrs = 0
     var high = false
-    maxLocs.foreach { loc =>
-      val nb = neighbors(loc)
-      if (nb >= math.ceil(n / 2).toInt && nb > maxNbrs) {
-        maxNbrs = nb; best = loc; high = true
+    k = 0
+    while (k < m) {
+      if (score(k) == maxScore) {
+        if (best < 0) best = k
+        val nb = neighbors(k)
+        if (nb >= n / 2 && nb > maxNbrs) { maxNbrs = nb; best = k; high = true }
       }
+      k += 1
     }
-    (best._1, best._2, if (high) 1.0 else 0.0)
+    val p = points(firstPt(best))
+    (p.lat, p.lng, if (high) 1.0 else 0.0)
   }
 
   /** A10 + A11 in one pass over a shared pairwise-distance matrix. The two
@@ -162,15 +188,18 @@ object Elections {
   def electBothWith(points: Seq[Pt], dist: (Pt, Pt) => Double,
                     radiusM: Double = 300.0, thresholdM: Double = 200.0)
       : ((Double, Double), (Double, Double, Double)) = {
-    val n = points.length
+    // indexed: callers pass the List that dedupAndCap returns, and the
+    // matrix fill below indexes it n² times
+    val pts = points.toIndexedSeq
+    val n = pts.length
     // guards identical to bestLatLng / clusterScore
     val a10Guard: Option[(Double, Double)] =
       if (n == 0) Some((0.0, 0.0))
-      else if (n < 4 || n > 500) Some((points(n - 1).lat, points(n - 1).lng))
+      else if (n < 4 || n > 500) Some((pts(n - 1).lat, pts(n - 1).lng))
       else None
     val a11Guard: Option[(Double, Double, Double)] =
       if (n == 0) Some((0.0, 0.0, 0.0))
-      else if (n < 3) Some((points(n - 1).lat, points(n - 1).lng, 0.0))
+      else if (n < 3) Some((pts(n - 1).lat, pts(n - 1).lng, 0.0))
       else None
     if (a10Guard.isDefined && a11Guard.isDefined)
       return (a10Guard.get, a11Guard.get)
@@ -187,7 +216,7 @@ object Elections {
     while (i < n) {
       var j = i
       while (j < n) {
-        val dij = dist(points(i), points(j))
+        val dij = dist(pts(i), pts(j))
         d(i)(j) = dij
         d(j)(i) = dij
         j += 1
@@ -195,8 +224,8 @@ object Elections {
       i += 1
     }
     val lookup = (a: Int, b: Int) => d(a)(b)
-    (a10Guard.getOrElse(a10Core(points, lookup, radiusM)),
-      a11Guard.getOrElse(a11Core(points, lookup, thresholdM)))
+    (a10Guard.getOrElse(a10Core(pts, lookup, radiusM)),
+      a11Guard.getOrElse(a11Core(pts, lookup, thresholdM)))
   }
 
   /** A11 cluster variant (get_cluster_best_lat_lng_with_score): winner is the

@@ -25,14 +25,23 @@ object BucketedUpsert {
 
   /** @param fresh  this epoch's rows (schema = the table's data columns,
     *               or a subset that `merge` completes)
-    * @param merge  (existingTouchedRows, freshRows) => merged rows for the
-    *               touched keys; receives existing rows projected to
-    *               fresh's columns
+    * @param merge  merged rows for the touched keys, from ONE frame: the
+    *               existing rows of the touched buckets (projected to
+    *               fresh's columns) already unioned with the fresh rows,
+    *               both carrying `bucket`, and hash-partitioned on
+    *               `bucket` into min(touched, defaultParallelism)
+    *               partitions. Group or window by (`bucket`, key) so the
+    *               planner reuses that partitioning: each bucket then
+    *               stays inside one task (one file per bucket) and up to
+    *               that many tasks merge and write in parallel. Grouping
+    *               by the key alone brings back a second shuffle, which
+    *               adaptive execution coalesces into one serial task. A
+    *               `bucket` column in the result is recomputed from the
+    *               key.
     */
   def upsert(fresh: DataFrame, tablePath: String, keyCol: String,
              numBuckets: Int = 64)(
-             merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val s = fresh.sparkSession
+             merge: DataFrame => DataFrame): Unit = {
     // checkpoint: the batch feeds the touched-bucket listing AND the merge;
     // in foreachBatch the source batch must not re-execute anyway
     val freshB = fresh.withColumn("bucket", bucketOf(keyCol, numBuckets))
@@ -52,7 +61,7 @@ object BucketedUpsert {
 
   private def upsertChecked(freshB: DataFrame, tablePath: String,
              keyCol: String, numBuckets: Int)(
-             merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+             merge: DataFrame => DataFrame): Unit = {
     val s = freshB.sparkSession
     // bounded driver-side metadata: at most numBuckets ints, never data
     val touched = freshB.select("bucket").distinct()
@@ -61,7 +70,7 @@ object BucketedUpsert {
       throw new IllegalArgumentException(
         s"bucketed upsert: null values in key column '$keyCol' — filter or fix upstream")
     if (touched.isEmpty) return
-    val dataCols = freshB.columns.toSeq.filterNot(_ == "bucket")
+    val cols = (freshB.columns.toSeq.filterNot(_ == "bucket") :+ "bucket").map(col)
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(tablePath)
     // only a genuinely-missing table means "empty": any other read failure
@@ -73,23 +82,30 @@ object BucketedUpsert {
     // that legitimately emptied every bucket — throws "unable to infer
     // schema" and wedges the pipeline; with the schema given, an empty root
     // simply reads as zero rows
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      freshB.schema.fields.filterNot(_.name == "bucket"))
     val storedSchema = org.apache.spark.sql.types.StructType(
-      dataSchema.fields :+
+      freshB.schema.fields.filterNot(_.name == "bucket") :+
         org.apache.spark.sql.types.StructField("bucket",
           org.apache.spark.sql.types.IntegerType))
     val existingTouched =
       if (!fs.exists(root))
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], dataSchema)
-          .select(dataCols.map(col): _*)
+        s.createDataFrame(s.sparkContext.emptyRDD[Row], storedSchema)
       else s.read.schema(storedSchema).parquet(tablePath)
         .filter(col("bucket").isin(touched.map(Int.box): _*))
-        .select(dataCols.map(col): _*)
-    val result = merge(existingTouched, freshB.select(dataCols.map(col): _*))
-      .withColumn("bucket", bucketOf(keyCol, numBuckets))
+    // an explicit partition count: adaptive execution never coalesces it,
+    // so up to n tasks merge, elect and write side by side
+    val n = math.min(touched.length, s.sparkContext.defaultParallelism)
+    val input = existingTouched.select(cols: _*)
+      .unionByName(freshB.select(cols: _*))
+      .repartition(n, col("bucket"))
+    val result = merge(input).withColumn("bucket", bucketOf(keyCol, numBuckets))
     val tmp = tablePath + "_epoch_tmp"
-    result.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+    // local bucket files go through NioLocalFileSystem: no `chmod`
+    // process per file and directory. Uncached, because the cached `file`
+    // instance would ignore the impl; inert for any other scheme.
+    result.write.mode("overwrite")
+      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .partitionBy("bucket").parquet(tmp)
     if (!fs.exists(root)) fs.mkdirs(root)
     touched.foreach { b =>
       val dst = new org.apache.hadoop.fs.Path(tablePath, s"bucket=$b")
@@ -103,5 +119,26 @@ object BucketedUpsert {
           s"bucketed upsert: rename $src -> $dst failed; bucket $b left empty")
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+  }
+}
+
+/** Hadoop's local file system with `setPermission` done through java.nio.
+  * Without Hadoop's native library, RawLocalFileSystem sets the mode of
+  * every file and directory it creates by spawning a `chmod` process: a
+  * parquet file costs two (data and .crc) and each directory one, so an
+  * epoch rewriting 64 buckets spawned about 200 processes. That is
+  * off-CPU time inside the writing tasks, and it stretches with the
+  * host's load. The permissions set are the same.
+  */
+final class NioLocalFileSystem
+  extends org.apache.hadoop.fs.LocalFileSystem(new NioRawLocalFileSystem)
+
+final class NioRawLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def setPermission(p: org.apache.hadoop.fs.Path,
+                             permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    // the sticky bit, which nio cannot set, takes the old path
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+      java.nio.file.attribute.PosixFilePermissions.fromString(permission.toString))
   }
 }

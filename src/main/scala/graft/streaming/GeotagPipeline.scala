@@ -29,7 +29,10 @@ object GeotagPipeline {
 
   /** Validity filters over the already-typed source columns (P2/P3).
     * Malformed payloads surface as null addr_hash (the source's PERMISSIVE
-    * decode) and drop here.
+    * decode) and drop here. So do coordinates outside [-90, 90] ×
+    * [-180, 180]: the decoder reads `1e400` as Infinity, and one non-finite
+    * point would make its key's election throw and wedge the stream on
+    * replay (NaN and ±Infinity all fail these range tests).
     */
   def validate(typed: DataFrame): DataFrame =
     typed
@@ -37,6 +40,7 @@ object GeotagPipeline {
       .filter(col("addr_hash").isNotNull &&
         col("type").isin("DEL", "PC") &&
         col("lat") =!= 0.0 && col("lng") =!= 0.0 &&
+        col("lat").between(-90.0, 90.0) && col("lng").between(-180.0, 180.0) &&
         col("accuracy") > 0 && col("accuracy") < 200)
 
   /** Merge a batch of points into the stored per-key history and re-elect.
@@ -44,7 +48,12 @@ object GeotagPipeline {
     * directories holding this batch's keys are read and rewritten, so each
     * epoch's work is O(batch + touched-buckets × cap) — keys in untouched
     * buckets are never scanned or rewritten (round 1 rewrote the whole
-    * table per epoch).
+    * table per epoch). The merge receives stored and fresh points already
+    * unioned and partitioned on `bucket`, and groups by (`bucket`,
+    * `addr_hash`) so the plan keeps that one shuffle: up to
+    * min(touched buckets, cores) tasks merge, elect and write in parallel,
+    * each bucket inside one of them. Grouping by `addr_hash` alone would add
+    * a second shuffle that adaptive execution coalesces into one task.
     */
   def electAndUpsert(batch: DataFrame, tablePath: String,
                      numBuckets: Int = 64): Unit = {
@@ -52,9 +61,9 @@ object GeotagPipeline {
       .select(col("addr_hash"), col("ts_ms"), col("lat"), col("lng"),
         col("accuracy").as("acc"))
     BucketedUpsert.upsert(fresh, tablePath, "addr_hash", numBuckets) {
-      (existing, freshRows) =>
-        val merged = existing.unionByName(freshRows)
-          .groupBy(col("addr_hash"))
+      input =>
+        val merged = input
+          .groupBy(col("bucket"), col("addr_hash"))
           .agg(sort_array(collect_list(struct(
             col("ts_ms"), col("lat"), col("lng"), col("acc")))).as("pts"))
         val elect = udf { (pts: Seq[Row]) =>

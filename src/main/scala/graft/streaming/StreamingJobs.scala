@@ -141,17 +141,18 @@ object StreamingJobs {
           .withColumn("acc", col("value") % 120.0)
           .withColumn("ts_ms", expr("ts_us div 1000"))
           .select("user_id", "lat", "lng", "acc", "ts_ms")
-        BucketedUpsert.upsert(pts, tablePath, "user_id") { (existing, fresh) =>
+        BucketedUpsert.upsert(pts, tablePath, "user_id") { input =>
           // bounded per-key history: newest 100 rows per user (reference
           // cap-100 semantics) keeps the table O(keys), not O(stream).
           // dropDuplicates makes an at-least-once RETRY of this batch a
           // no-op — the re-delivered rows are exact duplicates of what the
           // first attempt already merged (the reference dedups the same
-          // way via its (lat,lng,acc) triple dedup).
+          // way via its (lat,lng,acc) triple dedup). Both key on `bucket`
+          // too, so they reuse the upsert's bucket partitioning.
           val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("user_id").orderBy(col("ts_ms").desc)
-          existing.unionByName(fresh)
-            .dropDuplicates("user_id", "ts_ms", "lat", "lng", "acc")
+            .partitionBy("bucket", "user_id").orderBy(col("ts_ms").desc)
+          input
+            .dropDuplicates("bucket", "user_id", "ts_ms", "lat", "lng", "acc")
             .withColumn("rn", row_number().over(w))
             .filter(col("rn") <= 100).drop("rn")
         }

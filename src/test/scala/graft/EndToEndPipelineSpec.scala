@@ -45,9 +45,9 @@ class EndToEndPipelineSpec extends AnyFunSuite {
         .mode("append").save()
 
     def runEpoch(): Unit = {
-      val q = GeotagPipeline.stream(spark, topic, table, ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      // AvailableNow ends at drain; awaitTermination() rethrows a failed batch
+      GeotagPipeline.stream(spark, topic, table, ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
 
     // epoch 1: 4 clustered DEL points for h1 on partition 0, one invalid

@@ -44,9 +44,9 @@ class GeotagPipelineSpec extends AnyFunSuite {
       l1.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
     def run(): Unit = {
-      val q = GeotagPipeline.stream(spark, topic.toString, table, ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      // AvailableNow ends at drain; awaitTermination() rethrows a failed batch
+      GeotagPipeline.stream(spark, topic.toString, table, ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
     run()
 
@@ -79,5 +79,35 @@ class GeotagPipelineSpec extends AnyFunSuite {
     val h2 = after2.filter(after2("addr_hash") === "h2")
       .select("best_lat", "best_lng").distinct().collect().head
     assert(h2.getDouble(0) == 10.0 && h2.getDouble(1) == 70.0)
+  }
+
+  test("a ping with a non-finite or out-of-range coordinate is dropped, not a wedge") {
+    val topic = Files.createTempDirectory("geotag_poison_topic")
+    val p0 = topic.resolve("partition-0"); Files.createDirectories(p0)
+    val table = Files.createTempDirectory("geotag_poison_table").toString + "/lookup"
+    val ckpt = Files.createTempDirectory("geotag_poison_ckpt").toString
+    // `1e400` decodes to Infinity: a non-finite point that reached the
+    // election would fail the batch, and every replay of it
+    val lines = Seq(
+      payload("h1", "DEL", 12.9716, 77.5946, 10, 1000),
+      payload("h1", "DEL", 12.9717, 77.5947, 12, 2000),
+      payload("h1", "DEL", 12.9718, 77.5945, 15, 3000),
+      """k,{"addr_hash":"h1","type":"DEL","lat":1e400,"lng":77.5,"accuracy":10,"ts_ms":4000}""",
+      payload("h2", "PC", 10.0, 70.0, 50, 5000),
+      payload("h2", "PC", 10.0, 270.0, 50, 6000))
+    Files.write(p0.resolve("ledger-1.log"),
+      lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val q = GeotagPipeline.stream(spark, topic.toString, table, ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.exception.isEmpty &&
+      q.recentProgress.map(_.numInputRows).sum == lines.length)
+    val rows = spark.read.parquet(table)
+    assert(rows.filter(rows("ts_ms").isin(4000L, 6000L)).count() == 0)
+    val best = rows.select("addr_hash", "best_lat", "best_lng").distinct().collect()
+      .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    val h1 = Seq(Pt(12.9716, 77.5946, 10, 1000), Pt(12.9717, 77.5947, 12, 2000),
+      Pt(12.9718, 77.5945, 15, 3000))
+    assert(best == Map("h1" -> Elections.bestLatLng(h1), "h2" -> ((10.0, 70.0))))
   }
 }

@@ -208,18 +208,19 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
     val events = mem.toDF()
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
-    val q = StreamingJobs.bestLocationUpsert(events,
-        s"$tmp/lookup", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    // data goes in BEFORE start(): an AvailableNow query fixes its end
+    // offset when it starts, and awaitTermination() then ends at that
+    // drain (rethrowing a failed batch) instead of at a wall-clock deadline
+    def drain(): Unit =
+      StreamingJobs.bestLocationUpsert(events, s"$tmp/lookup", s"$tmp/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
     mem.addData(eventRow(1, 1000000, 1, "click", 10.0),
       eventRow(2, 2000000, 1, "click", 20.0))
-    q.awaitTermination(60000)
-    val q2 = StreamingJobs.bestLocationUpsert(events,
-        s"$tmp/lookup", s"$tmp/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    drain()
     mem.addData(eventRow(3, 3000000, 1, "click", 30.0),
       eventRow(4, 4000000, 2, "view", 40.0))
-    q2.awaitTermination(60000)
+    drain()
     val table = spark.read.parquet(s"$tmp/lookup")
     val byUser = table.groupBy("user_id").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
